@@ -80,15 +80,6 @@ class EngineConf:
     #: zero-shuffle advantage still wins: small dimension-table-sized
     #: indexes like the flagship's 48k entities)
     broadcast_index_max_rows: int = 200_000
-    #: grid cell width multiplier (in units of estimated kth-NN distance)
-    knn_grid_cell_scale: float = 4.0
-    #: max neighbor-ring expansion rounds before falling back to brute force
-    knn_max_rounds: int = 6
-    #: salt factor for hot cells (rows per cell above which we salt)
-    skew_salt_threshold: int = 200_000
-    skew_salt_buckets: int = 8
-    #: Arrow batch size for mapInPandas kernels
-    arrow_batch_rows: int = 4096
     extra_spark_conf: dict = field(default_factory=dict)
 
 

@@ -10,7 +10,7 @@ Dataflow (all DataFrame transformations):
       ├─ top-dim feature projection (BKAFI dimensionality pruning = column
       │   pruning, blocking.py:126-142)
       ├─ RobustScaler fit on cands → scaled feature vectors (A9)
-      ├─ exact kNN join (broadcast or grid strategy, operators/knn.py)
+      ├─ exact kNN join (broadcast or range strategy, operators/knn.py)
       └─ rank window 1..k → labeled candidate pairs; per-k slices are
           filter(rank<=k) over ONE ranked result — the reference's
           incremental top-k reuse (blocking.py:211-230) for free.
@@ -124,7 +124,6 @@ def run_bkafi_blocking(
     nn_param: int = NN_PARAM,
     criterion: str = "std",
     feature_order: list[str] | None = None,
-    strategy: str = "auto",
     conf: EngineConf = DEFAULT_CONF,
     sdr_factor: bool = False,
 ) -> BlockingResult:
@@ -159,9 +158,9 @@ def run_bkafi_blocking(
         cands, index = bkafi_vectors(
             properties, order[:dim], stats=stats, sdr_factors=factors
         )
-        nn = knn_join(
-            cands, index, nn_param, strategy=strategy, conf=conf
-        ).withColumn("bkafi_dim", F.lit(dim))
+        nn = knn_join(cands, index, nn_param, conf=conf).withColumn(
+            "bkafi_dim", F.lit(dim)
+        )
         per_dim.append(nn)
     candidates = per_dim[0]
     for df in per_dim[1:]:

@@ -19,7 +19,6 @@ only in the signature kernels (Arrow-batched).
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -69,6 +68,10 @@ def _hash_params(n_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     b = rng.integers(0, np.iinfo(np.uint64).max, n_hashes, dtype=np.uint64)
     return a | np.uint64(1), b  # odd multipliers: bijective mod 2^64
 
+
+#: signature tables up to this many estimated bytes are broadcast back
+#: onto the LSH pair set in ``minhash_lsh_pairs`` (~240k docs at 64 hashes)
+SIG_BCAST_MAX_BYTES = 128 << 20
 
 #: polynomial base for shingle hashing (FNV-1a 64-bit prime — public constant)
 _SHINGLE_PRIME = np.uint64(1099511628211)
@@ -191,19 +194,15 @@ def minhash_lsh_pairs(
     50k docs / 38.8M pairs, local[32]: 57.7 s end-to-end vs 16.4 s with
     broadcast back-joins; guide §3.1). With ``n_ids`` the operator
     broadcasts the signature table iff its estimated bytes fit
-    ``SPARK_GRAFT_SIG_BCAST_MB`` (default 128 MB — ~240k docs at 64
+    ``SIG_BCAST_MAX_BYTES`` (128 MB — ~240k docs at 64
     hashes); above the cap, or when ``n_ids`` is unknown, the planner's
     own choice stands (sort-merge at scale: correct, spills gracefully)."""
     if n_hashes is None:
         n_hashes = len(signatures.select("signature").first()[0])
     bcast_sigs = False
     if n_ids is not None:
-        try:
-            cap_mb = float(os.environ.get("SPARK_GRAFT_SIG_BCAST_MB", "128"))
-        except ValueError:
-            cap_mb = 128.0
         est_bytes = n_ids * (16 + 8 * n_hashes)
-        bcast_sigs = est_bytes <= cap_mb * (1 << 20)
+        bcast_sigs = est_bytes <= SIG_BCAST_MAX_BYTES
     rows_per_band = n_hashes // bands
     # band rows carry ONLY (id, band, bucket): the 64-long signature array
     # (~1 KB/row) must not ride through the bands-x self-join shuffle and

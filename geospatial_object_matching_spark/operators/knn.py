@@ -4,19 +4,16 @@ indexes (blocking.py:62-76, 106-118) with two distributed strategies:
 
 - **broadcast**: when the index side fits in executor memory, its
   (id, vector) arrays are broadcast and each cands partition computes exact
-  top-k against the full matrix in a chunked numpy kernel (bounded memory:
-  running top-k merge, never a |B|×|I| materialization). This is the Spark
-  analog of "build one KDTree and query it" and is exact.
+  top-k against the full matrix with the Morton-block batch searcher
+  (bounded memory: block scans with a rolling top-k, never a |B|×|I|
+  materialization). This is the Spark analog of "build one KDTree and
+  query it" and is exact.
 
-- **grid**: cell-partitioned neighbor-ring expansion per the north rule.
-  Index vectors get integer grid cells (first ≤3 scaled dims, width w);
-  round r joins still-unfinished candidates to the Chebyshev shell-r cells
-  (equi-join on cell coordinates — a plain shuffled hash join Catalyst can
-  plan, AQE-skew-splittable), keeps a running top-k per candidate via a
-  rank window, and retires a candidate once its kth distance < r·w (every
-  unsearched point is ≥ r·w away — completeness proof in the
-  ``knn_join_grid`` docstring). Distances are JVM-side column expressions
-  (no Python in the join loop).
+- **range**: the index is cut into equi-depth dim-0 slices; a cogrouped
+  ``applyInPandas`` runs the same batch searcher per slice, and the thin
+  set of candidates whose kth-ball crosses a slice edge is answered by one
+  extra pass over the index (details in the ``knn_join_range`` docstring).
+  The index never reaches the driver.
 
 Both strategies return identical rows: (cand_id, index_id, rank, dist)
 with rank 1..k ordered by (dist, index_id) — the deterministic tie-break
@@ -38,9 +35,8 @@ from ..config import DEFAULT_CONF, EngineConf
 # dist is nullable ONLY because pyarrow's pandas->Arrow conversion encodes
 # float NaN as Arrow NULL: the Python kernels never emit a true null, so
 # every strategy coalesces null back to NaN right after its Arrow boundary
-# (keeping parity with the JVM-expression strategies, where NaN flows
-# through sqrt/agg natively and sorts LAST in ascending windows — a null
-# would sort FIRST and corrupt the (dist, id) rank order).
+# (NaN sorts LAST in the range join's ascending rank window, as in the
+# oracle; a null would sort FIRST and corrupt the (dist, id) rank order).
 KNN_SCHEMA = T.StructType(
     [
         T.StructField("cand_id", T.StringType(), False),
@@ -50,18 +46,6 @@ KNN_SCHEMA = T.StructType(
     ]
 )
 _NAN = float("nan")
-
-
-def _dist_expr(a: str, b: str):
-    """JVM-side euclidean distance between two array<double> columns —
-    whole-stage-codegen friendly, no Python."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -79,25 +63,25 @@ def knn_join_broadcast(
 ) -> DataFrame:
     """Exact kNN with the index side broadcast to every task.
 
-    Kernel (round-2 rewrite, the KDTree analog): the index is sorted ONCE
-    per task by its first coordinate; each query scans only the contiguous
-    window of rows whose dim-0 gap to the query is ≤ its current kth
-    distance, growing the window geometrically from an initial 4k rows.
-    Completeness is the 1-D gap bound (same argument as
-    ``knn_join_equidepth``): every row outside the window differs from the
-    query by > kth in dim 0 alone, so its full-space distance is > kth and
-    it cannot enter the top-k even on ties. On clustered data (scaled
-    BKAFI vectors, building centroids) the window is a few hundred rows
-    instead of the whole index — replacing the reference's KDTree query
-    (blocking.py:113-114) with contiguous vectorized numpy.
+    Kernel (the KDTree analog): each task builds one
+    :func:`_make_batch_searcher` over the broadcast index — rows ordered
+    along a Z-curve and grouped into blocks with per-dim min/max boxes —
+    and queries it batch by batch. Completeness is the block lower bound:
+    a query's distance to a block's box is ≤ its distance to every row in
+    the block, so once that bound exceeds the query's current kth
+    distance no row of the block can enter the top-k, even on ties. On
+    clustered data (scaled BKAFI vectors, building centroids) a query
+    scans a few blocks instead of the whole index — replacing the
+    reference's KDTree query (blocking.py:113-114) with contiguous
+    vectorized numpy.
 
     Memory discipline: the sandbox (and any memory-overcommitted executor)
     pays brutal first-touch page-fault costs on large fresh numpy
-    temporaries, so the per-query temporaries are bounded by the window
-    size and the sorted index copy is made once per task.
+    temporaries, so the searcher's scratch buffers are preallocated once
+    per task and reused across batches.
 
     Ties: selection keeps every row at the kth distance, then a final
-    (dist, id) lexsort picks the exact k — identical ordering to the
+    (dist, id) sort picks the exact k — identical ordering to the
     oracle's ``sorted(..., key=(dist, id))``.
     """
     spark = cands.sparkSession
@@ -136,7 +120,7 @@ def knn_join_broadcast(
             # python round, element-wise on purpose: np.round's scaled
             # multiply differs from the correctly-rounded python round in
             # ulp cases, and the emitted dists must stay bit-identical to
-            # the other strategies (strategy-equality tests + oracles)
+            # the range strategy (strategy-equality tests + oracles)
             if round_dists:
                 out_d = [round(float(x), round_dists) for x in d_sel]
             else:
@@ -182,10 +166,10 @@ def _morton_codes(mat: np.ndarray, lo: np.ndarray, span: np.ndarray) -> np.ndarr
 def _make_local_searcher(
     ids_i: np.ndarray, mat_i: np.ndarray, k_eff: int, chunk: int = 128
 ):
-    """Morton-box local kNN kernel — the single searcher shared by the
-    broadcast strategy (whole index per task) and the range strategy (one
-    equi-depth slice per task). Returns ``search(qrow) -> (ids, dists)``,
-    the exact (dist, id)-ordered top-k.
+    """Morton-box local kNN kernel, one query at a time — the exact path
+    :func:`_make_batch_searcher` falls back to for its rare hard queries
+    (non-finite kth, exhausted visit list). Returns
+    ``search(qrow) -> (ids, dists)``, the exact (dist, id)-ordered top-k.
 
     Rows are ordered along a 3-D Z-curve and grouped into ``chunk``-row
     blocks with per-dim min/max bounding boxes. A query computes the
@@ -299,33 +283,34 @@ def _make_local_searcher(
 
 
 def _make_batch_searcher(
-    ids_i: np.ndarray, mat_i: np.ndarray, k_eff: int, chunk: int = 128,
-    group: int = 256,
+    ids_i: np.ndarray, mat_i: np.ndarray, k_eff: int, chunk: int = 128
 ):
     """Batched variant of :func:`_make_local_searcher` — identical results
     (same per-pair distance arithmetic, same (dist, id-string) tie order),
     ~10x less per-query Python/numpy-dispatch overhead.
 
-    The scalar searcher runs ~20 small numpy calls PER QUERY (measured
-    0.35-0.55 ms/query at sf1 — 330 core-seconds for 600k queries).  Here
-    queries are sorted along the same Z-curve as the index and processed
-    in ``group``-sized batches of near neighbors, so one vectorized pass
-    serves the whole group:
+    The index is Morton-ordered (same Z-curve as the scalar searcher) and
+    split into ``chunk``-row blocks with per-dim min/max boxes. Returns
+    ``search_many(qmat)``, which takes the queries in input order, in
+    ``QB = 2048``-row chunks, and per chunk:
 
-    - block lower bounds for all (query, block) pairs in one broadcasted
-      op — elementwise identical to the scalar kernel's, and a PROVABLE
-      lower bound in float (monotone subtract/square/sum/sqrt against the
-      row arithmetic), so pruning can never drop a true top-k member;
-    - the group scans the UNION of blocks any member still needs
-      (``lb <= kth`` per query, NaN-lb blocks always scanned), growing a
-      shared (group x pooled-rows) distance matrix in vectorized chunks;
-      kth per query re-tightens each round via axis partition;
-    - final per-query selection: rows with ``d <= kth`` (all rows while
-      kth is inf — the <k-finite/NaN tail case), then the same
-      ``np.lexsort((id_str, d))[:k]`` the scalar kernel applies.  The
-      pool is a superset of the scalar kernel's, and top-k by (dist, id)
-      from any superset that provably contains the true top-k is the
-      true top-k — bit-identical ids AND distances.
+    - computes box lower bounds for all (query, block) pairs in one
+      broadcasted pass — elementwise identical to the scalar kernel's, and
+      a PROVABLE lower bound in float (monotone subtract/square/sum/sqrt
+      against the row arithmetic), so pruning can never drop a true top-k
+      member;
+    - gives each query a visit list of its 24 smallest-bound blocks, then
+      scans in lockstep: each round every active query scans its next
+      block in one vectorized gather, merges the distances into a rolling
+      k-smallest pool (its kth only shrinks), and stops once its next
+      block's bound exceeds kth;
+    - routes to the scalar searcher the rare query whose kth is still
+      infinite after two blocks (NaN coordinates, tiny or NaN-heavy index)
+      or whose visit list runs out while blocks may still qualify;
+    - selects, for all queries at once, rows with ``d <= kth`` ordered by
+      (query, dist, id-string rank) and keeps k per query. The kept pool
+      is a superset of the true top-k, so the result is bit-identical
+      ids AND distances to the scalar kernel's.
     """
     ids_i = np.asarray(ids_i, dtype=object)
     n_idx = len(ids_i)
@@ -525,384 +510,6 @@ def _make_batch_searcher(
     return search_many
 
 
-# --------------------------------------------------------------------------
-# grid strategy (neighbor-ring expansion)
-# --------------------------------------------------------------------------
-
-
-def _grid_coord_cols(df: DataFrame, features_col: str, width: float, gdims: int):
-    out = df
-    for j in range(gdims):
-        out = out.withColumn(
-            f"_g{j}",
-            F.floor(F.element_at(F.col(features_col), j + 1) / F.lit(width)).cast(
-                "long"
-            ),
-        )
-    return out
-
-
-def _shell_offsets(gdims: int, ring: int) -> list[tuple[int, ...]]:
-    rng = range(-ring, ring + 1)
-    if gdims == 1:
-        pts = [(x,) for x in rng]
-    elif gdims == 2:
-        pts = [(x, y) for x in rng for y in rng]
-    else:
-        pts = [(x, y, z) for x in rng for y in rng for z in rng]
-    return [p for p in pts if max(abs(v) for v in p) == ring]
-
-
-def knn_join_grid(
-    cands: DataFrame,
-    index: DataFrame,
-    k: int,
-    grid_width: float,
-    id_col: str = "obj_id",
-    features_col: str = "features",
-    round_dists: int | None = 3,
-    conf: EngineConf = DEFAULT_CONF,
-) -> DataFrame:
-    """Exact kNN via grid-cell neighbor-ring expansion.
-
-    Completeness invariant (_ring_bound): after searching Chebyshev shells
-    0..r, any unsearched index point differs by ≥ r+1 cells in some grid
-    dim, hence by ≥ r·width in that coordinate, hence its full-space
-    distance is ≥ r·width. A candidate whose kth-best distance is
-    strictly below r·width can therefore never improve → retired.
-    """
-    spark = cands.sparkSession
-    n_dims = len(cands.select(features_col).first()[0])
-    gdims = min(n_dims, 3)
-
-    idx_g = _grid_coord_cols(
-        index.select(F.col(id_col).alias("index_id"), F.col(features_col).alias("_fi")),
-        "_fi",
-        grid_width,
-        gdims,
-    ).persist()
-    idx_g.count()
-
-    remaining = _grid_coord_cols(
-        cands.select(F.col(id_col).alias("cand_id"), F.col(features_col).alias("_fc")),
-        "_fc",
-        grid_width,
-        gdims,
-    ).persist()
-
-    gcols = [f"_g{j}" for j in range(gdims)]
-    best: DataFrame | None = None
-    w = Window.partitionBy("cand_id").orderBy("dist", "index_id")
-
-    for r in range(conf.knn_max_rounds + 1):
-        if remaining.isEmpty():
-            break
-        shell = _shell_offsets(gdims, r)
-        offsets_df = spark.createDataFrame(
-            [tuple(int(v) for v in o) for o in shell],
-            schema=", ".join(f"_d{j} long" for j in range(gdims)),
-        )
-        probes = remaining.crossJoin(F.broadcast(offsets_df))
-        join_cond = [
-            probes[f"_g{j}"] + probes[f"_d{j}"] == idx_g[f"_g{j}"] for j in range(gdims)
-        ]
-        new_pairs = (
-            probes.join(idx_g, join_cond, "inner")
-            .select(
-                "cand_id",
-                "index_id",
-                _dist_expr("_fc", "_fi").alias("dist"),
-            )
-        )
-        round_best = (
-            new_pairs
-            if best is None
-            else best.select("cand_id", "index_id", "dist").unionByName(new_pairs)
-        )
-        # localCheckpoint truncates lineage: the loop otherwise nests every
-        # previous round's plan inside the next (plan size grows
-        # exponentially with rounds — OOMs Catalyst at ~10 rounds)
-        round_best = (
-            round_best.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .localCheckpoint(eager=True)
-        )
-        if best is not None:
-            best.unpersist()
-        best = round_best
-
-        # retire candidates: kth distance strictly below the ring bound
-        stats = best.groupBy("cand_id").agg(
-            F.count("*").alias("_n"), F.max("dist").alias("_kth")
-        )
-        done_ids = stats.filter(
-            (F.col("_n") >= F.lit(k)) & (F.col("_kth") < F.lit(float(r) * grid_width))
-        ).select("cand_id")
-        new_remaining = remaining.join(
-            done_ids, remaining["cand_id"] == done_ids["cand_id"], "left_anti"
-        ).localCheckpoint(eager=True)
-        remaining.unpersist()
-        remaining = new_remaining
-
-    # stragglers (sparse regions): exact brute-force against the full index
-    if not remaining.isEmpty():
-        brute = knn_join_broadcast(
-            remaining.select(
-                F.col("cand_id").alias(id_col), F.col("_fc").alias(features_col)
-            ),
-            idx_g.select(
-                F.col("index_id").alias(id_col), F.col("_fi").alias(features_col)
-            ),
-            k,
-            id_col=id_col,
-            features_col=features_col,
-            round_dists=None,
-        )
-        done_pairs = best.join(
-            remaining.select("cand_id"), "cand_id", "left_anti"
-        ).select("cand_id", "index_id", "dist")
-        best = done_pairs.unionByName(
-            brute.select("cand_id", "index_id", "dist")
-        )
-    else:
-        best = best.select("cand_id", "index_id", "dist")
-
-    out = best.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if round_dists is not None:
-        out = out.withColumn("dist", F.round("dist", round_dists))
-    return out.select("cand_id", "index_id", "rank", "dist")
-
-
-# --------------------------------------------------------------------------
-# equi-depth strategy (skew-proof scale path)
-# --------------------------------------------------------------------------
-
-
-def knn_join_equidepth(
-    cands: DataFrame,
-    index: DataFrame,
-    k: int,
-    id_col: str = "obj_id",
-    features_col: str = "features",
-    round_dists: int | None = 3,
-    rows_per_bin: int = 256,
-    init_radius: int = 4,
-    conf: EngineConf = DEFAULT_CONF,
-) -> DataFrame:
-    """Exact kNN via equi-depth 1-D binned neighbor-ring expansion.
-
-    The fixed-width grid collapses under skew (Zipf-clustered feature
-    space → one hot cell holds half the index and its per-round join
-    explodes). Equi-depth bins on the *first* feature dimension are
-    perfectly balanced on the index side by construction: bin boundaries
-    are index quantiles, every bin holds ~rows_per_bin rows, so round r
-    joins each candidate to at most (2r+1)·rows_per_bin index rows no
-    matter how skewed the distribution. Distances remain full-dimensional
-    JVM expressions.
-
-    Completeness: after searching bins [b-r, b+r], every unsearched point
-    has first-coordinate strictly below boundary[b-r] or at/above
-    boundary[b+r+1], so its full-space distance is ≥
-    gap = min(x₀ - boundary[b-r], boundary[b+r+1] - x₀) (edges → ∞).
-    A candidate retires when its kth distance < gap.
-
-    Win condition (measured, BENCH.md): pruning power is the ratio of the
-    kth-NN distance to the dim-0 bin width. On *geographic* spaces
-    (building centroids: neighbors within meters, bins within cities)
-    candidates retire after 1-2 rounds and this is the only join shape
-    that works beyond executor memory. On *dense low-dimensional feature*
-    spaces (3-dim log-scaled BKAFI vectors, kth distance ≈ 100 bin
-    widths) most of the index is scanned through shuffle joins and the
-    broadcast kernel wins by a large constant — hence the dispatch
-    threshold in ``knn_join`` keeps broadcast up to
-    ``conf.broadcast_index_max_rows``.
-    """
-    spark = cands.sparkSession
-    # interior boundaries = index quantiles of dim 0 (approx quantiles are
-    # fine: balance is a performance property; correctness uses the actual
-    # boundary VALUES in the gap bound)
-    n_index = index.count()
-    n_bins = max(1, n_index // rows_per_bin)
-    x0 = F.element_at(F.col(features_col), 1)
-    probs = [i / n_bins for i in range(1, n_bins)]
-    interior = (
-        index.agg(
-            F.percentile_approx(
-                x0, F.array(*[F.lit(p) for p in probs]), 10_000
-            ).alias("q")
-        ).first()["q"]
-        if probs
-        else []
-    )
-    interior = [float(v) for v in interior]
-    bc_bounds = spark.sparkContext.broadcast(np.asarray(interior))
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _bin(x: pd.Series) -> pd.Series:
-        return pd.Series(
-            np.searchsorted(bc_bounds.value, x.to_numpy(), side="right")
-        )
-
-    @pandas_udf("double")
-    def _gap_udf(x0: pd.Series, cbin: pd.Series, rr: pd.Series) -> pd.Series:
-        """min(dim-0 distance to the nearest UNsearched bin boundary) after
-        searching bins [cbin-r, cbin+r]; edges -> inf. Boundaries come from
-        the broadcast, so the plan carries zero literals."""
-        b = bc_bounds.value
-        nb = len(b)
-        x = x0.to_numpy(dtype=np.float64)
-        c = cbin.to_numpy(dtype=np.int64)
-        r_ = rr.to_numpy(dtype=np.int64)
-        if nb == 0:
-            return pd.Series(np.full(len(x), np.inf))
-        lo_i = c - r_ - 1
-        hi_i = c + r_
-        gb = np.where(lo_i >= 0, x - b[np.clip(lo_i, 0, nb - 1)], np.inf)
-        ga = np.where(hi_i <= nb - 1, b[np.clip(hi_i, 0, nb - 1)] - x, np.inf)
-        return pd.Series(np.minimum(gb, ga))
-
-    idx = (
-        index.select(
-            F.col(id_col).alias("index_id"), F.col(features_col).alias("_fi")
-        )
-        .withColumn("_bin", _bin(F.element_at(F.col("_fi"), 1)))
-        .persist()
-    )
-    idx.count()
-    remaining = (
-        cands.select(
-            F.col(id_col).alias("cand_id"),
-            F.col(features_col).alias("_fc"),
-        )
-        .withColumn("_x0", F.element_at(F.col("_fc"), 1))
-        .withColumn("_bin", _bin(F.col("_x0")))
-        .persist()
-    )
-
-    w = Window.partitionBy("cand_id").orderBy("dist", "index_id")
-    best: DataFrame | None = None
-    finished: list[DataFrame] = []
-    # geometric radius growth: the dim-0 gap must exceed the kth FULL-space
-    # distance before a candidate retires, which can take tens of bins —
-    # doubling the radius per round keeps the driver loop at O(log n_bins)
-    # rounds while the per-round join stays bounded by the new shell size.
-    # init_radius sets the FIRST shell: each driver round costs a fixed
-    # ~7-job overhead (join, rank window, two localCheckpoints, retirement
-    # agg, isEmpty), so an opening shell that already covers the typical
-    # kth-NN slab retires most candidates in round 1 — the 2M-row bench
-    # (BENCH.md round 4) drove the default from 1 to 4.
-    radii = [0, max(1, int(init_radius))]
-    while radii[-1] < n_bins:
-        radii.append(radii[-1] * 2)
-
-    for round_i in range(1, len(radii)):
-        if remaining.isEmpty():
-            break
-        r_prev, r = radii[round_i - 1], radii[round_i]
-        # shell offsets as a runtime sequence() (plan size constant in r —
-        # a literal array would put O(n_bins) expressions into the plan)
-        if round_i == 1:
-            shell_expr = F.sequence(F.lit(-r), F.lit(r))
-        else:
-            shell_expr = F.flatten(
-                F.array(
-                    F.sequence(F.lit(-r), F.lit(-(r_prev + 1))),
-                    F.sequence(F.lit(r_prev + 1), F.lit(r)),
-                )
-            )
-        probes = (
-            remaining.withColumn("_off", F.explode(shell_expr))
-            .withColumn("_pbin", F.col("_off") + F.col("_bin"))
-            .filter((F.col("_pbin") >= 0) & (F.col("_pbin") < n_bins))
-        )
-        new_pairs = probes.join(
-            idx, probes["_pbin"] == idx["_bin"], "inner"
-        ).select(
-            "cand_id", "_x0", probes["_bin"].alias("_cbin"),
-            "index_id", _dist_expr("_fc", "_fi").alias("dist"),
-        )
-        carried = (
-            None
-            if best is None
-            else best.select("cand_id", "_x0", "_cbin", "index_id", "dist")
-        )
-        round_best = (
-            new_pairs if carried is None else carried.unionByName(new_pairs)
-        )
-        # localCheckpoint truncates lineage: the loop otherwise nests every
-        # previous round's plan inside the next (plan size grows
-        # exponentially with rounds — OOMs Catalyst at ~10 rounds)
-        round_best = (
-            round_best.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .localCheckpoint(eager=True)
-        )
-        if best is not None:
-            best.unpersist()
-
-        # retirement: kth distance strictly below the boundary gap.
-        # Boundaries live in a broadcast variable read by a pandas_udf —
-        # NOT as plan literals (n_bins can be millions at scale; a literal
-        # array would explode the Catalyst plan).
-        gap = _gap_udf(F.col("_x0"), F.col("_cbin"), F.lit(r))
-        stats = round_best.groupBy("cand_id").agg(
-            F.count("*").alias("_n"),
-            F.max("dist").alias("_kth"),
-            F.first("_x0").alias("_x0"),
-            F.first("_cbin").alias("_cbin"),
-        )
-        done = (
-            stats.filter(
-                (F.col("_n") >= F.lit(min(k, n_index))) & (F.col("_kth") < gap)
-            )
-            .select("cand_id")
-            .localCheckpoint(eager=True)  # tiny; read by 3 joins below
-        )
-        # retired candidates' rows are FINAL (their rank was assigned by
-        # this round's window) — park them and stop re-ranking them: the
-        # per-round union + window + checkpoint cost then tracks the
-        # SHRINKING remaining set, not the full query set (the round-4
-        # restructure that took the 1M-row bench from ~230 s to the
-        # BENCH.md number)
-        finished.append(round_best.join(done, "cand_id", "leftsemi"))
-        best = round_best.join(done, "cand_id", "left_anti")
-        new_remaining = remaining.join(done, "cand_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        remaining.unpersist()
-        remaining = new_remaining
-
-    parts = [
-        f.select("cand_id", "index_id", "rank", "dist") for f in finished
-    ]
-    if not remaining.isEmpty():
-        # safety net only: the final radius covers every bin, where the
-        # gap is +inf and every candidate retires
-        brute = knn_join_broadcast(
-            remaining.select(
-                F.col("cand_id").alias(id_col), F.col("_fc").alias(features_col)
-            ),
-            idx.select(
-                F.col("index_id").alias(id_col), F.col("_fi").alias(features_col)
-            ),
-            k,
-            id_col=id_col,
-            features_col=features_col,
-            round_dists=None,
-        )
-        parts.append(brute.select("cand_id", "index_id", "rank", "dist"))
-    if not parts:  # zero candidates in
-        parts = [spark.createDataFrame([], KNN_SCHEMA)]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if round_dists is not None:
-        out = out.withColumn("dist", F.round("dist", round_dists))
-    return out.select("cand_id", "index_id", "rank", "dist")
-
-
 # knn_join_range caches two intermediates per call. ``cnd`` is dropped as
 # soon as round 1 is materialized, but ``r1`` must outlive the RETURNED lazy
 # DataFrame (its `done` branch reads r1), so it cannot be unpersisted inside
@@ -924,17 +531,15 @@ def knn_join_range(
     halo_slices: int | None = None,
 ) -> DataFrame:
     """Exact distributed kNN via equi-depth dim-0 range slices — the
-    beyond-broadcast scale path (round 4; supersedes the pair-exploding
-    equi-depth ring loop as the auto dispatch, see BENCH.md).
+    beyond-broadcast scale path (round 4, see BENCH.md).
 
     Plan shape:
       1. Interior dim-0 quantiles of the index split it into ~equal
-         ``slice_rows``-row slices (balanced by construction — the skew
-         story of the equi-depth bins, at coarser grain). Both sides get
-         a slice id; a cogrouped ``applyInPandas`` runs the SAME
-         contiguous-numpy bounded-window kernel the broadcast strategy
-         uses (``_make_local_searcher``) against each slice — per-query
-         work identical to broadcast, but the index never leaves the
+         ``slice_rows``-row slices (balanced by construction, whatever
+         the skew). Both sides get a slice id; a cogrouped
+         ``applyInPandas`` runs the SAME batch searcher the broadcast
+         strategy uses (``_make_batch_searcher``) against each slice —
+         per-query work identical to broadcast, but the index never leaves the
          executors and no per-pair rows are ever materialized (the ring
          loop's 1M-row bench shuffled ~360M exploded pairs through rank
          windows; this shuffles each index row once).
@@ -952,7 +557,7 @@ def knn_join_range(
     At 10^9 index rows: ~10^4 boundary doubles broadcast, slices of
     ``slice_rows`` rows (a few MB of Arrow per task), two candidate
     shuffles, zero driver collects. Deterministic (dist, index_id) tie
-    order everywhere — identical rows to the other strategies.
+    order everywhere — identical rows to the broadcast strategy.
     """
     import os as _os
     import sys as _sys
@@ -1332,7 +937,6 @@ def knn_join(
     id_col: str = "obj_id",
     features_col: str = "features",
     strategy: str = "auto",
-    grid_width: float | None = None,
     round_dists: int | None = 3,
     conf: EngineConf = DEFAULT_CONF,
 ) -> DataFrame:
@@ -1342,8 +946,13 @@ def knn_join(
     'range' is the beyond-broadcast scale path — measured 5× FASTER than
     broadcast at the 2M-row crossover (15.5 s vs 76.9 s, 50k queries,
     BENCH.md round 4; broadcast pays a driver collect of the whole index)
-    and flat 2M→4M; 'equidepth' keeps the pair-exploring ring variant;
-    'grid' the fixed-width cell variant (uniform spaces)."""
+    and flat 2M→4M. ``strategy`` is one of 'auto', 'broadcast', 'range';
+    anything else raises ``ValueError``."""
+    if strategy not in ("auto", "broadcast", "range"):
+        raise ValueError(
+            f"unknown kNN strategy {strategy!r}: expected 'auto', 'broadcast' "
+            "or 'range'"
+        )
     if strategy == "auto":
         n_index = index.count()
         strategy = (
@@ -1353,49 +962,6 @@ def knn_join(
         return knn_join_broadcast(
             cands, index, k, id_col, features_col, round_dists=round_dists
         )
-    if strategy == "range":
-        return knn_join_range(
-            cands, index, k, id_col, features_col, round_dists=round_dists
-        )
-    if strategy == "equidepth":
-        return knn_join_equidepth(
-            cands, index, k, id_col, features_col, round_dists=round_dists, conf=conf
-        )
-    if grid_width is None:
-        grid_width = estimate_grid_width(cands, index, k, features_col)
-    return knn_join_grid(
-        cands,
-        index,
-        k,
-        grid_width,
-        id_col,
-        features_col,
-        round_dists=round_dists,
-        conf=conf,
+    return knn_join_range(
+        cands, index, k, id_col, features_col, round_dists=round_dists
     )
-
-
-def estimate_grid_width(
-    cands: DataFrame, index: DataFrame, k: int, features_col: str, sample: int = 256
-) -> float:
-    """Heuristic cell width ≈ expected kth-NN distance, from a small exact
-    sample probe (driver-side; sample × sample numpy)."""
-    c = np.array(
-        [r[0] for r in cands.select(features_col).limit(sample).collect()],
-        dtype=np.float64,
-    )
-    i = np.array(
-        [r[0] for r in index.select(features_col).limit(sample * 4).collect()],
-        dtype=np.float64,
-    )
-    if c.ndim == 1:
-        c, i = c[:, None], i[:, None]
-    d = np.sqrt(
-        np.maximum(
-            (c * c).sum(1)[:, None] - 2 * c @ i.T + (i * i).sum(1)[None, :], 0.0
-        )
-    )
-    kth = np.sort(d, axis=1)[:, min(k, d.shape[1]) - 1]
-    # scale up: the sampled index is sparser than the full one, so this
-    # over-estimates the true kth distance → wider cells → fewer rounds
-    return float(np.median(kth)) or 1.0

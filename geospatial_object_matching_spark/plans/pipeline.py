@@ -44,7 +44,6 @@ def run_pipeline(
     decision_percentile: float = 0.95,
     zoom: int = 15,
     checkpoints: CheckpointManager | None = None,
-    knn_strategy: str = "auto",
     conf: EngineConf = DEFAULT_CONF,
     with_features: bool = True,
 ) -> dict:
@@ -129,7 +128,7 @@ def run_pipeline(
     def job_candidates():
         df = stage(
             "candidates",
-            lambda: knn_join(cands_v, index_v, k, strategy=knn_strategy, conf=conf),
+            lambda: knn_join(cands_v, index_v, k, conf=conf),
             params={"dim": bkafi_dim, "k": k},
         ).persist()
         df.count()  # materialize inside the thread — that's the overlap

@@ -6,7 +6,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from geospatial_object_matching_spark.config import EngineConf
 from geospatial_object_matching_spark.operators.blocking import (
     bkafi_feature_order,
     bkafi_vectors,
@@ -16,9 +15,8 @@ from geospatial_object_matching_spark.operators.blocking import (
 )
 from geospatial_object_matching_spark.operators.extract import extract_objects
 from geospatial_object_matching_spark.operators.knn import (
+    knn_join,
     knn_join_broadcast,
-    knn_join_equidepth,
-    knn_join_grid,
 )
 from geospatial_object_matching_spark.operators.properties import compute_properties
 from geospatial_object_matching_spark.sources.pages import (
@@ -143,9 +141,7 @@ class TestBlocking:
 
     def test_candidate_pairs_match_oracle(self, properties, oracle_blocking):
         order, oracle_nn, od = oracle_blocking
-        res = run_bkafi_blocking(
-            properties, dims=[1, 3], strategy="broadcast"
-        )
+        res = run_bkafi_blocking(properties, dims=[1, 3])
         pairs = res.candidates.toPandas()
         for dim in (1, 3):
             for k in (1, 5, 20):
@@ -187,9 +183,7 @@ class TestBlocking:
         cands, index = O.bkafi_vectors(prop_dict, order, 3, sdr_factors=factors)
         oracle_nn = O.knn_join(cands, index, k=21)
 
-        res = run_bkafi_blocking(
-            properties, dims=[3], strategy="broadcast", sdr_factor=True
-        )
+        res = run_bkafi_blocking(properties, dims=[3], sdr_factor=True)
         pairs = res.candidates.toPandas()
         for k in (1, 5, 20):
             engine_pairs = set(
@@ -205,9 +199,7 @@ class TestBlocking:
             }
             assert engine_pairs == oracle_pairs, f"k={k}"
 
-        plain = run_bkafi_blocking(
-            properties, dims=[3], strategy="broadcast"
-        ).candidates.toPandas()
+        plain = run_bkafi_blocking(properties, dims=[3]).candidates.toPandas()
         plain_pairs = set(
             map(tuple, plain[plain["rank"] <= 20][["cand_id", "index_id"]].values)
         )
@@ -215,35 +207,6 @@ class TestBlocking:
             map(tuple, pairs[pairs["rank"] <= 20][["cand_id", "index_id"]].values)
         )
         assert sdr_pairs != plain_pairs
-
-    def test_grid_strategy_equals_broadcast(self, properties):
-        order = bkafi_feature_order(properties)
-        cands, index = bkafi_vectors(properties, order[:3])
-        cands, index = cands.persist(), index.persist()
-        b = knn_join_broadcast(cands, index, 10).toPandas()
-        conf = EngineConf(knn_max_rounds=4)
-        g = knn_join_grid(cands, index, 10, grid_width=0.5, conf=conf).toPandas()
-        key = ["cand_id", "rank"]
-        b = b.sort_values(key).reset_index(drop=True)
-        g = g.sort_values(key).reset_index(drop=True)
-        pd.testing.assert_frame_equal(
-            b[["cand_id", "index_id", "rank"]], g[["cand_id", "index_id", "rank"]]
-        )
-        np.testing.assert_allclose(b["dist"], g["dist"], atol=1e-9)
-
-    def test_equidepth_strategy_equals_broadcast(self, properties):
-        order = bkafi_feature_order(properties)
-        cands, index = bkafi_vectors(properties, order[:3])
-        cands, index = cands.persist(), index.persist()
-        b = knn_join_broadcast(cands, index, 10).toPandas()
-        e = knn_join_equidepth(cands, index, 10, rows_per_bin=8).toPandas()
-        key = ["cand_id", "rank"]
-        b = b.sort_values(key).reset_index(drop=True)
-        e = e.sort_values(key).reset_index(drop=True)
-        pd.testing.assert_frame_equal(
-            b[["cand_id", "index_id", "rank"]], e[["cand_id", "index_id", "rank"]]
-        )
-        np.testing.assert_allclose(b["dist"], e["dist"], atol=1e-9)
 
     def test_range_strategy_equals_broadcast(self, properties):
         from geospatial_object_matching_spark.operators.knn import knn_join_range
@@ -294,6 +257,18 @@ class TestBlocking:
             b[["cand_id", "index_id", "rank"]], r[["cand_id", "index_id", "rank"]]
         )
         np.testing.assert_allclose(b["dist"], r["dist"], atol=1e-9)
+
+    @pytest.mark.parametrize("strategy", ["grid", "brodcast"])
+    def test_unknown_strategy_raises(self, spark, strategy):
+        """Only 'auto', 'broadcast' and 'range' exist; any other value
+        (a removed strategy, a misspelling) must fail loudly instead of
+        silently running some other join."""
+        rows = [("a", [0.0, 1.0])]
+        df = spark.createDataFrame(
+            rows, "obj_id string, features array<double>"
+        )
+        with pytest.raises(ValueError, match="unknown kNN strategy"):
+            knn_join(df, df, 1, strategy=strategy)
 
     def test_nan_features_tie_order(self, spark):
         """NaN distances (reachable: elongation is NaN for degenerate
@@ -353,22 +328,10 @@ class TestBlocking:
             .sort_values(["cand_id", "rank"])
             .reset_index(drop=True)
         )
-        from geospatial_object_matching_spark.operators.knn import (
-            knn_join_equidepth,
-            knn_join_grid,
-        )
-
         for got in (
             knn_join_broadcast(cand, idx, k, round_dists=None).toPandas(),
             knn_join_range(
                 cand, idx, k, slice_rows=4, round_dists=None
-            ).toPandas(),
-            # the JVM strategies must land the same NaN tail: Spark sorts
-            # NaN LAST in ascending ORDER BY, matching the kernel's
-            # (dist, id) lexsort
-            knn_join_grid(cand, idx, k, 0.3, round_dists=None).toPandas(),
-            knn_join_equidepth(
-                cand, idx, k, round_dists=None, rows_per_bin=4
             ).toPandas(),
         ):
             got = got.sort_values(["cand_id", "rank"]).reset_index(drop=True)
@@ -416,40 +379,6 @@ class TestBlocking:
             np.testing.assert_allclose(
                 got_d, [d[i] for i in order], atol=1e-12
             )
-
-    def test_equidepth_many_bins_equals_broadcast(self, spark):
-        """One bin per index row (n_bins == n_index): exercises the
-        runtime-sequence shell + broadcast-boundary gap udf (round-2
-        de-literaling) — the plan must not embed per-bin literals and the
-        result must still be exact."""
-        import pyspark.sql.functions as F
-
-        n_i, n_c = 600, 80
-        idx = spark.range(n_i).select(
-            F.concat(F.lit("i"), F.col("id")).alias("obj_id"),
-            F.array(
-                (F.col("id") * 0.01),
-                F.sin(F.col("id").cast("double")),
-                F.cos(F.col("id").cast("double") * 0.7),
-            ).alias("features"),
-        )
-        cand = spark.range(n_c).select(
-            F.concat(F.lit("c"), F.col("id")).alias("obj_id"),
-            F.array(
-                (F.col("id") * 0.07 + 0.003),
-                F.sin(F.col("id").cast("double") * 1.3),
-                F.cos(F.col("id").cast("double")),
-            ).alias("features"),
-        )
-        b = knn_join_broadcast(cand, idx, 5).toPandas()
-        e = knn_join_equidepth(cand, idx, 5, rows_per_bin=1).toPandas()
-        key = ["cand_id", "rank"]
-        b = b.sort_values(key).reset_index(drop=True)
-        e = e.sort_values(key).reset_index(drop=True)
-        pd.testing.assert_frame_equal(
-            b[["cand_id", "index_id", "rank"]], e[["cand_id", "index_id", "rank"]]
-        )
-        np.testing.assert_allclose(b["dist"], e["dist"], atol=1e-9)
 
     def test_centroid_blocking_matches_oracle(self, objects, oracle_state):
         _, od, _ = oracle_state

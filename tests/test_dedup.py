@@ -451,102 +451,3 @@ class TestCosine:
         v = vecs.astype(np.float64)
         want = [int(np.argmax([np.dot(x, c) for c in C])) for x in v]
         assert got["cid"].tolist() == want
-
-
-class TestProductQuantization:
-    """PQ codebooks + ADC top-k (round 5): the memory-compression ANN
-    scale path (FAISS IndexPQ analog)."""
-
-    @pytest.fixture(scope="class")
-    def clustered(self, spark):
-        rng = np.random.default_rng(13)
-        centers = rng.normal(0, 1, (8, 24))
-        rows = []
-        for i in range(400):
-            c = centers[i % 8]
-            rows.append((i, (c + rng.normal(0, 0.15, 24)).tolist()))
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        ).persist()
-        df.count()
-        yield df
-        df.unpersist()
-
-    def test_fit_assign_deterministic_and_bounded(self, spark, clustered):
-        m1 = SIM.pq_fit(clustered, n_subspaces=4, n_codes=16, seed=7)
-        m2 = SIM.pq_fit(clustered, n_subspaces=4, n_codes=16, seed=7)
-        for a, b in zip(m1["codebooks"], m2["codebooks"]):
-            assert np.array_equal(a, b)
-        assert m1["bounds"] == [0, 6, 12, 18, 24]
-        codes = SIM.pq_assign(clustered, m1).toPandas()
-        assert len(codes) == 400
-        arr = np.stack(codes["codes"].to_numpy())
-        assert arr.shape == (400, 4)
-        assert arr.min() >= 0 and arr.max() < 16
-
-    def test_adc_scores_match_spec(self, spark, clustered):
-        """ADC plumbing exactness: the distributed score equals the
-        per-spec numpy computation (LUT gather sum over the same codes)
-        for every emitted row."""
-        m = SIM.pq_fit(clustered, n_subspaces=4, n_codes=16, seed=7)
-        codes_df = SIM.pq_assign(clustered, m).persist()
-        q = clustered.filter(F.col("vec_id") < 5)
-        out = SIM.pq_topk_adc(codes_df, q, m, k=6).toPandas()
-        codes = {
-            r["vec_id"]: np.asarray(r["codes"])
-            for _, r in codes_df.toPandas().iterrows()
-        }
-        emb = {
-            r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
-            for r in clustered.collect()
-        }
-        b = m["bounds"]
-        for _, r in out.iterrows():
-            qv = emb[r["query_id"]]
-            qv = qv / np.linalg.norm(qv)
-            expect = sum(
-                float(
-                    qv[b[s] : b[s + 1]] @ m["codebooks"][s][codes[r["vec_id"]][s]]
-                )
-                for s in range(4)
-            )
-            assert abs(r["score"] - expect) < 1e-12
-        # rank contract: desc score, ties by vec_id, no self matches
-        for qid, grp in out.groupby("query_id"):
-            grp = grp.sort_values("rank")
-            assert list(grp["rank"]) == list(range(1, len(grp) + 1))
-            assert (grp["score"].diff().dropna() <= 1e-15).all()
-            assert qid not in set(grp["vec_id"])
-
-    def test_adc_recall_vs_exact(self, spark, clustered):
-        """PQ contract on clustered vectors: the raw ADC top-10 beats
-        chance by an order of magnitude (coarse 4x16 codes cannot resolve
-        WITHIN-cluster fine order — calibrated 0.205 vs chance 0.025),
-        the 50-row ADC shortlist captures ~all of the exact top-10, and
-        the shortlist + exact-rerank composition reproduces the exact
-        top-10 nearly verbatim."""
-        m = SIM.pq_fit(clustered, n_subspaces=4, n_codes=16, seed=7)
-        codes_df = SIM.pq_assign(clustered, m).persist()
-        q = clustered.filter(F.col("vec_id") < 20)
-        exact = SIM.dense_cosine_topk(clustered, q, k=10).toPandas()
-        truth = {
-            qid: set(g["vec_id"]) for qid, g in exact.groupby("query_id")
-        }
-
-        def recall(df):
-            hits = tot = 0
-            for qid, t in truth.items():
-                got = set(df[df["query_id"] == qid]["vec_id"])
-                hits += len(t & got)
-                tot += len(t)
-            return hits / tot
-
-        raw = SIM.pq_topk_adc(codes_df, q, m, k=10).toPandas()
-        assert recall(raw) >= 0.15, recall(raw)  # chance is 0.025
-        short = SIM.pq_topk_adc(codes_df, q, m, k=50).toPandas()
-        assert recall(short) >= 0.9, recall(short)
-        rer = SIM.pq_topk_rerank(
-            codes_df, clustered, q, m, k=10, k_short=50
-        ).toPandas()
-        assert recall(rer) >= 0.9, recall(rer)
-        codes_df.unpersist()

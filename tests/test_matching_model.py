@@ -95,8 +95,7 @@ class TestSparkPredict:
         assert sorted(order1) == sorted(OBJECT_PROPERTIES)
 
         res = run_bkafi_blocking(
-            props, dims=[3], k_list=(20,), feature_order=order1,
-            strategy="broadcast",
+            props, dims=[3], k_list=(20,), feature_order=order1
         )
         recall = res.recall["blocking_recall"].iloc[0]
         assert recall >= 0.5  # learned features must be informative

@@ -111,47 +111,29 @@ class TestAggregation:
         assert "WholeStageCodegen" in s
 
 
-class TestKnnGridPlan:
-    def test_grid_join_is_hash_join_jvm_distance(self, spark):
-        """The grid kNN round join must be a shuffled/broadcast hash join
-        on cell coordinates with the distance as a JVM expression."""
-        from geospatial_object_matching_spark.operators.blocking import (
-            bkafi_feature_order,
-            bkafi_vectors,
-        )
-        from geospatial_object_matching_spark.operators.extract import (
-            extract_objects,
-        )
-        from geospatial_object_matching_spark.operators.properties import (
-            compute_properties,
-        )
-        from geospatial_object_matching_spark.sources.pages import (
-            generate_pages_df,
-        )
+class TestKnnRangePlan:
+    def test_range_join_cogroups_on_slice(self, spark):
+        """The beyond-broadcast kNN join runs its kernel as one cogrouped
+        Arrow pass over both sides hash-partitioned on the slice id: no
+        cartesian or nested-loop pair join anywhere in the plan."""
         from geospatial_object_matching_spark.operators.knn import (
-            _dist_expr,
-            _grid_coord_cols,
+            knn_join_range,
         )
 
-        props = compute_properties(
-            extract_objects(generate_pages_df(spark, 20, seed=1))
-        ).persist()
-        order = bkafi_feature_order(props)
-        cands, index = bkafi_vectors(props, order[:2])
-        cg = _grid_coord_cols(
-            cands.select("obj_id", F.col("features").alias("_fc")), "_fc", 0.5, 2
+        def vecs(prefix, n, scale):
+            return spark.range(n).select(
+                F.concat(F.lit(prefix), F.col("id")).alias("obj_id"),
+                F.array(
+                    F.col("id").cast("double") * scale,
+                    F.sin(F.col("id").cast("double")),
+                ).alias("features"),
+            )
+
+        out = knn_join_range(
+            vecs("c", 40, 0.5), vecs("i", 200, 0.1), 5, slice_rows=16
         )
-        ig = _grid_coord_cols(
-            index.select(
-                F.col("obj_id").alias("index_id"), F.col("features").alias("_fi")
-            ),
-            "_fi",
-            0.5,
-            2,
-        )
-        joined = cg.join(
-            ig, [cg["_g0"] == ig["_g0"], cg["_g1"] == ig["_g1"]]
-        ).select(_dist_expr("_fc", "_fi").alias("dist"))
-        plan = plan_of(joined)
-        assert "HashJoin" in plan or "SortMergeJoin" in plan
-        assert "BatchEvalPython" not in plan
+        plan = out._jdf.queryExecution().toString()
+        assert "FlatMapCoGroupsInPandas" in plan
+        assert "hashpartitioning(_slice" in plan
+        assert "CartesianProduct" not in plan
+        assert "NestedLoopJoin" not in plan

@@ -1,7 +1,6 @@
 """Scale benchmark for the dense broadcast-GEMM cosine/IP top-k kernel
 (operators/similarity.py::dense_cosine_topk) at sizes where the crossJoin
-form is hopeless — evidence for the flat-IP-index scale story the same
-way tools/equidepth_bench.py evidences the beyond-broadcast kNN path.
+form is hopeless — evidence for the flat-IP-index scale story.
 
 Synthetic deterministic input (PCG64-seeded clustered Gaussians — no
 external data): N index vectors x D dims, Q queries, top-k. Reports
